@@ -1,4 +1,4 @@
-"""Seeded input generators for the four benchmark workloads.
+"""Seeded input generators for the benchmark workloads.
 
 Every generator is a pure function of its seed and size arguments: it
 draws from one ``numpy.random.default_rng(seed)`` stream in a fixed
@@ -24,7 +24,7 @@ def _write_parquet(table: pa.Table, path: str) -> None:
     pq.write_table(table, path, **_PQ)
 
 
-# --- hw_points: planted clusters + far outliers (FIXTURES.md §1) ---------------
+# --- apps, HW1 and HW2: planted clusters + far outliers (FIXTURES.md §1) ----
 
 def points(out_dir: str, seed: int, n: int, n_outliers: int = 100,
            n_clusters: int = 9, sigma: float = 1.0) -> dict:
@@ -68,7 +68,7 @@ def points(out_dir: str, seed: int, n: int, n_outliers: int = 100,
             "bytes": os.path.getsize(path)}
 
 
-# --- corpus_prep: Zipf corpus with planted near-duplicate clusters ------------
+# --- apps, corpus pipeline: Zipf corpus, planted near-duplicate clusters ----
 
 def _vocab(rng: np.random.Generator, size: int) -> np.ndarray:
     syl = np.array(["ka", "lo", "mi", "ne", "ru", "ta", "vo", "pe", "si",
@@ -144,7 +144,7 @@ def corpus(out_dir: str, seed: int, n_docs: int, dup_frac: float = 0.15,
             "bytes": os.path.getsize(path)}
 
 
-# --- stream_items: HW3 "heavy" item stream (FIXTURES.md §2) -------------------
+# --- apps, HW3: "heavy" item stream (FIXTURES.md §2) ------------------------
 
 def stream(out_dir: str, seed: int, n: int, n_files: int, n_heavy: int = 10,
            heavy_share: float = 0.075) -> dict:

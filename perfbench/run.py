@@ -5,14 +5,15 @@
 Run from the root of a source checkout. One process per run: it
 generates the workload's inputs from the seed under
 ``.bench_build/perfbench/`` in the checkout, starts a Spark session
-with ``SPARK_GRAFT_CPUS`` = the usable cores, runs an untimed warm-up
-pass (set-up ends there), then ``ceil(S / nominal pass time)`` timed
-passes, checks every pass, stops Spark and waits for its JVM. The last
-line of standard output is the result JSON; with ``--trace 0`` its
-metrics are the end-to-end metrics, with ``--trace 1`` the per-layer
-metrics of a traced run (see ``perfbench/README.md``). A run record
-with input sizes, load averages and tail percentiles is written next
-to the inputs and printed on the line before the result.
+with ``SPARK_GRAFT_CPUS`` = the usable cores (set-up ends there), runs
+``round(S / nominal pass time)`` timed passes (at least one; the first
+on the fresh JVM), checks every pass, stops Spark and waits for its
+JVM. The last line of standard output is
+the result JSON; with ``--trace 0`` its metrics are the end-to-end
+metrics, with ``--trace 1`` the per-layer metrics of a traced run (see
+``perfbench/README.md``). A run record with input sizes, load averages
+and tail percentiles is written next to the inputs and printed on the
+line before the result.
 """
 
 from __future__ import annotations
@@ -33,14 +34,8 @@ import catalog  # noqa: E402
 import stats  # noqa: E402
 
 PACKAGE = "big_data_hw_23_24_spark"
-# Below the box's RAM; small enough that the heap reaches its cap in
-# every run, so peak RSS repeats (a 2g heap grew by ±15 % run to run).
-DRIVER_MEM = "1g"
-# Untimed passes before timing. On a 4-core box the first pass of a
-# fresh JVM is 3-4x a steady pass (JVM start-up, Python workers, code
-# generation, JIT). One more warm-up pass would make the timed pass
-# steadier but costs ~10 s a run, which the run budget does not allow.
-WARMUP_PASSES = 1
+# Below the box's RAM (the package's default is 24g).
+DRIVER_MEM = "2g"
 
 
 def _loadavg() -> float:
@@ -182,17 +177,6 @@ def main(argv: list[str]) -> int:
     return 0
 
 
-def _passes(wl, seconds: float) -> int:
-    return max(1, math.ceil(seconds / wl.pass_s))
-
-
-def _warm_up(wl, spark) -> list:
-    ops = []
-    for _ in range(WARMUP_PASSES):
-        ops += _run_ops(wl.run_pass, spark)
-    return ops
-
-
 def _start(wl, confs: dict):
     """get_session, then point the workload's CPU clock at the driver,
     its JVM and the JVM's Python workers."""
@@ -216,19 +200,38 @@ def _finish(errors_per_op: list[list[str]], record: dict) -> dict:
     return {"correct": failed == 0, "attempted": len(errors_per_op), "failed": failed}
 
 
+def _heap_peak_mb(spark) -> float:
+    """Sum of the peak used bytes of the driver JVM's heap pools."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    total = 0
+    for pool in mf.getMemoryPoolMXBeans():
+        if pool.getType().toString() == "Heap memory":
+            total += pool.getPeakUsage().getUsed()
+    return total / 2**20
+
+
+def _passes(wl, seconds: float) -> int:
+    """Timed passes of a run: fixed by ``--seconds``, not by how fast
+    the machine is, so CPU sums compare between runs."""
+    return max(1, round(seconds / wl.pass_s))
+
+
 def _untraced(wl, args, confs: dict, record: dict) -> dict:
-    t0 = time.perf_counter()
+    """Set-up is ``get_session``; then the timed passes, the first on
+    the fresh JVM."""
+    t0, c0 = time.perf_counter(), _tree_cpu_s(os.getpid())
     spark, jvm = _start(wl, confs)
-    record["get_session_s"] = time.perf_counter() - t0
-    ops = _warm_up(wl, spark)
-    record["setup_s"] = time.perf_counter() - t0
-    walls, cpus, timed = [], [], []
+    record["setup_wall_s"] = time.perf_counter() - t0
+    record["setup_cpu_s"] = wl.cpu() - c0
+    walls, cpus, ops = [], [], []
     for _ in range(_passes(wl, args.seconds)):
         t, c, got = wl._timed(_run_ops, wl.run_pass, spark)
         walls.append(t)
         cpus.append(c)
         ops += got
-        timed += [op for op in got if op[0] == op[0]]  # raised ops have no time
+    # before the oracle check, whose result size depends on the seed
+    record["driver_peak_mb"] = _vm_hwm_mb("self")
+    timed = [op for op in ops if op[0] == op[0]]  # a raised pass has no times
     try:
         errs = wl.oracle_check(spark)
     except Exception as e:
@@ -236,27 +239,26 @@ def _untraced(wl, args, confs: dict, record: dict) -> dict:
         errs = [f"oracle check raised {type(e).__name__}: {e}"]
     if errs is not None:
         ops.append((0.0, 0.0, errs))
-    rss = _vm_hwm_mb("self") + _vm_hwm_mb(jvm)
+    record.update(heap_peak_mb=_heap_peak_mb(spark), jvm_hwm_mb=_vm_hwm_mb(jvm))
     _stop(spark)
     out = _finish([op[2] for op in ops], record)
-    job_cpu = stats.median(cpus)
-    # every pass raised: the result is already incorrect; keep metrics finite
-    op_walls = [op[0] for op in timed] or [stats.median(walls)]
-    op_cpus = [op[1] for op in timed] or [job_cpu]
-    # wall-clock and per-operation figures: in the record (see catalog.py)
-    record.update(passes=len(walls), pass_walls=walls, pass_cpu_s=cpus,
-                  job_s=stats.median(walls), ops_per_s=len(op_walls) / sum(walls),
-                  op_p50_s=stats.median(op_walls), op_tail=stats.tail(op_walls),
-                  op_cpu_p50_s=stats.median(op_cpus), op_cpu_tail=stats.tail(op_cpus))
-    m = {"setup_s": record["setup_s"], "job_cpu_s": job_cpu,
-         "rows_per_cpu_s": wl.rows() / job_cpu, "peak_rss_mb": rss}
+    op_walls = [op[0] for op in timed] or [sum(walls)]
+    record.update(pass_walls=walls, pass_cpu_s=cpus, job_s=sum(walls), job_cpu_s=sum(cpus),
+                  op_walls=op_walls, op_cpu_s=[op[1] for op in timed],
+                  op_p50_s=stats.median(op_walls), op_tail=stats.tail(op_walls), **wl.notes)
+    triggers = getattr(wl, "triggers", None)
+    if triggers:
+        record.update(batch_p50_s=stats.median(triggers), batch_tail=stats.tail(triggers))
+    m = catalog.end_to_end(record)
     out["metrics"] = {k: {"value": m[k], "unit": u} for k, u in catalog.END_TO_END.items()}
     return out
 
 
 def _traced(wl, args, confs: dict, work: str, record: dict) -> dict:
-    """Same seed and inputs, event log on: plain passes, then as many
-    replay passes with one span per layer call."""
+    """Same seed and inputs, event log on, and the timed passes run
+    under the tracer: each app run (or query) is a span, each call into
+    a layer function a step inside it. Per-layer figures are totals
+    over the timed passes, as ``job_cpu_s`` is."""
     from spans import Tracer, event_log_file, self_times, span_counters
 
     log_dir = os.path.join(work, "eventlog")
@@ -268,28 +270,21 @@ def _traced(wl, args, confs: dict, work: str, record: dict) -> dict:
     with tr.span("session", "get_session"):
         spark, _ = _start(wl, confs)
     tr.sc = spark.sparkContext
-    ops = [op[2] for op in _warm_up(wl, spark)]
-    # plain, replay, replay, plain: pass times still fall pass by pass
-    # after the warm-up (JIT), so the mirrored order cancels the drift
-    n = 2 * _passes(wl, args.seconds)
-    plain, traced = [], []
-    for i in range(2 * n):
-        t0 = time.perf_counter()
-        if (i % 4) in (0, 3):
-            ops += [op[2] for op in _run_ops(wl.run_pass, spark)]
-            plain.append(time.perf_counter() - t0)
-        else:
-            got = _run_ops(wl.replay, spark, tr)
-            traced.append(time.perf_counter() - t0)
-            ops += [e if isinstance(e, list) else e[2] for e in got]
+    n = _passes(wl, args.seconds)
+    t0 = time.perf_counter()
+    wl.tracer = tr
+    with wl.traced(tr):
+        ops = [op[2] for _ in range(n) for op in _run_ops(wl.run_pass, spark)]
+    wl.tracer = None
+    traced_s = time.perf_counter() - t0
+    named = wl.layer_metrics(tr)
     _stop(spark)  # flushes the event log
     out = _finish(ops, record)
     path = event_log_file(log_dir)
     counters = span_counters(path, tr.spans) if path else {}
     out["metrics"] = catalog.per_layer_metrics(
-        wl.layer_metrics(tr, n), tr.spans, n, counters, self_times(tr.spans),
-        stats.median(plain), stats.median(traced))
-    record.update(untraced_walls=plain, traced_walls=traced)
+        named, tr.spans, counters, self_times(tr.spans), traced_s, tr.overhead_s)
+    record.update(traced_job_s=traced_s, spans=len(tr.spans))
     return out
 
 

@@ -1,17 +1,26 @@
 """Spans for the traced run: wall time, self time, Spark jobs, and the
 Spark event-log counters of the jobs each span started.
 
-A span is one timed call into a layer's public function. Spans nest
-(a query's build span holds its ``load_table`` spans); self time is a
-span's time minus the union of its children's intervals. Each span on
-the tracing thread runs under its own Spark job group, so its job count
-comes from ``statusTracker().getJobIdsForGroup``. Jobs that carry no
-span group (those a streaming query starts on its own thread) are
-attributed by submission time to the innermost span that contains it.
+A span is either a timed block (``Tracer.span``: an app run, a query's
+build or action) or a *step*: a call into a layer's public function,
+patched in by ``Tracer.wrap`` while the workload runs the real app. A
+step stays open after the call returns, until the next step in the
+same enclosing span or the end of that span, so the actions the app
+runs on the returned DataFrame are inside the step of the layer that
+built it. Calls a step makes into other wrapped functions are its
+child steps. Self time is a span's time minus the union of its
+children's intervals.
+
+The innermost open span on the tracing thread owns the Spark job
+group, so each span's job count comes from
+``statusTracker().getJobIdsForGroup``. Jobs that carry no span group
+(those a streaming query starts on its own thread) are attributed by
+submission time to the innermost span that contains it.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -24,8 +33,12 @@ class Tracer:
     def __init__(self, sc=None):
         self.sc = sc
         self.spans: list[dict] = []
-        self._stack: list[int] = []
+        # one frame per open span: [span id, id of its open step or None]
+        self._frames: list[list] = []
+        self.last: dict[str, object] = {}  # "layer:name" -> last step's result
+        self.overhead_s = 0.0  # time spent in the tracer's own Spark calls
         self._lock = threading.Lock()
+        self._thread = threading.get_ident()
 
     def _new(self, layer: str, name: str, parent: int | None) -> dict:
         with self._lock:
@@ -34,28 +47,101 @@ class Tracer:
             self.spans.append(rec)
         return rec
 
-    @contextmanager
-    def span(self, layer: str, name: str):
-        """Time the body as one span under the current span."""
-        parent = self._stack[-1] if self._stack else None
-        rec = self._new(layer, name, parent)
+    def current(self) -> int | None:
+        """Id of the innermost open span on the tracing thread."""
+        if not self._frames:
+            return None
+        sid, step = self._frames[-1]
+        return sid if step is None else step
+
+    def _set_group(self) -> None:
+        if self.sc is None:
+            return
+        t0 = time.perf_counter()
+        sid = self.current()
+        if sid is None:
+            self.sc.setLocalProperty("spark.jobGroup.id", None)
+        else:
+            s = self.spans[sid]
+            self.sc.setJobGroup(s["group"], f"{s['layer']}:{s['name']}")
+        self.overhead_s += time.perf_counter() - t0
+
+    def _open(self, layer: str, name: str) -> dict:
+        rec = self._new(layer, name, self.current())
         if self.sc is not None:
             rec["group"] = f"perfbench-{rec['id']}"
-            self.sc.setJobGroup(rec["group"], f"{layer}:{name}")
-        self._stack.append(rec["id"])
         rec["wall0"] = time.time()
         rec["t0"] = time.perf_counter()
+        return rec
+
+    def _close(self, sid: int) -> None:
+        rec = self.spans[sid]
+        rec["t1"] = time.perf_counter()
+        rec["wall1"] = time.time()
+        if self.sc is not None:
+            rec["jobs"] = len(self.sc.statusTracker().getJobIdsForGroup(rec["group"]))
+            self.overhead_s += time.perf_counter() - rec["t1"]
+
+    def _end_step(self) -> None:
+        """Close the open step of the innermost frame, if any."""
+        frame = self._frames[-1]
+        if frame[1] is not None:
+            self._close(frame[1])
+            frame[1] = None
+
+    @contextmanager
+    def span(self, layer: str, name: str):
+        """Time the body as one span under the innermost open span."""
+        rec = self._open(layer, name)
+        self._frames.append([rec["id"], None])
+        self._set_group()
         try:
             yield rec
         finally:
-            rec["t1"] = time.perf_counter()
-            rec["wall1"] = time.time()
-            self._stack.pop()
-            if self.sc is not None:
-                rec["jobs"] = len(self.sc.statusTracker()
-                                  .getJobIdsForGroup(rec["group"]))
-                up = self.spans[self._stack[-1]]["group"] if self._stack else None
-                self.sc.setLocalProperty("spark.jobGroup.id", up)
+            self._end_step()
+            self._frames.pop()
+            self._close(rec["id"])
+            self._set_group()
+
+    def step(self, layer: str, name: str, fn, *a, **kw):
+        """Call ``fn`` as a step of the innermost frame (see module doc)."""
+        self._end_step()
+        rec = self._open(layer, name)
+        rec["step"] = True
+        self._frames[-1][1] = rec["id"]
+        self._frames.append([rec["id"], None])
+        self._set_group()
+        try:
+            out = self.last[f"{layer}:{name}"] = fn(*a, **kw)
+            return out
+        finally:
+            self._end_step()
+            self._frames.pop()
+            self._set_group()
+
+    @contextmanager
+    def wrap(self, targets):
+        """Patch ``(module, attribute, layer, step name)`` targets so a
+        call from the tracing thread inside an open span is a step.
+        Apps import their operators inside ``run``, so patching the
+        defining module is enough."""
+        saved = []
+        for mod, attr, layer, name in targets:
+            orig = getattr(mod, attr)
+            saved.append((mod, attr, orig))
+
+            @functools.wraps(orig)
+            def call(*a, _orig=orig, _layer=layer, _name=name, **kw):
+                if threading.get_ident() != self._thread or not self._frames:
+                    return _orig(*a, **kw)
+                return self.step(_layer, _name, _orig, *a, **kw)
+
+            setattr(mod, attr, call)
+        try:
+            yield
+        finally:
+            for mod, attr, orig in reversed(saved):
+                setattr(mod, attr, orig)
 
     def add(self, layer: str, name: str, t0: float, t1: float,
             parent: int | None) -> dict:

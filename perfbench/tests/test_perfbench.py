@@ -116,10 +116,15 @@ def test_stream_check_rejects_wrong_histogram_and_samples():
     hist = {}
     for it in items:
         hist[it] = hist.get(it, 0) + 1
-    assert checks.check_stream(hist, items, [1, 2], 0.25, [1, 2, 7]) == []
-    assert checks.check_stream({**hist, 1: 49}, items, [1, 2], 0.25, [1, 2])
-    assert checks.check_stream(hist, items, [1], 0.25, [1, 2])        # extra frequent
-    assert checks.check_stream(hist, items, [1, 2], 0.25, [1])        # sticky missed 2
+    table = {1: 45, 2: 30, 105: 1}  # item 1 admitted after 5 occurrences
+    ok = (hist, items, [1, 2], 0.25)
+    assert checks.check_stream(*ok, table, [1, 2], 20) == []
+    assert checks.check_stream(*ok, table, [], 46) == []              # admitted late: allowed
+    assert checks.check_stream({**hist, 1: 49}, items, [1, 2], 0.25, table, [1, 2], 20)
+    assert checks.check_stream(hist, items, [1], 0.25, table, [1, 2], 20)  # extra frequent
+    assert checks.check_stream(*ok, {1: 45, 105: 1}, [1], 20)         # 2 never admitted
+    assert checks.check_stream(*ok, {**table, 2: 31}, [1, 2], 20)     # overcount
+    assert checks.check_stream(*ok, table, [1], 20)                    # report != table
 
 
 def test_query_check_rejects_wrong_values_rows_and_columns():
@@ -145,7 +150,7 @@ def test_printed_metric_names_match_benchmark_json():
     assert len(names) == len(set(names))
     import workloads
     assert {w["name"] for w in bench["workloads"]} <= set(workloads.WORKLOADS)
-    printed = catalog.per_layer_metrics({}, [], 1, {}, {}, 1.0, 1.1)
+    printed = catalog.per_layer_metrics({}, [], {}, {}, 1.0, 0.1)
     assert list(printed) == list(catalog.per_layer_units())
 
 
@@ -158,6 +163,43 @@ def test_tail_reports_percentile_and_sample_count():
     assert t == {"value": 3.0, "percentile": 100, "samples": 3, "beyond": 0}
     with pytest.raises(ValueError):
         stats.tail([])
+
+
+def test_steps_stay_open_until_the_next_layer_call():
+    import types
+
+    mod = types.SimpleNamespace()
+    mod.build = lambda x: x + 1
+    mod.outer = lambda x: mod.build(x) * 2  # calls a wrapped function
+    tr = spans.Tracer()
+    assert mod.build(1) == 2
+    with tr.wrap([(mod, "build", "layer.a", "build"),
+                  (mod, "outer", "layer.b", "outer")]):
+        assert mod.build(1) == 2            # outside any span: not traced
+        with tr.span("apps", "run"):
+            assert mod.build(1) == 2
+            after_build = tr.current()
+            assert mod.outer(1) == 4
+            after_outer = tr.current()
+        assert tr.current() is None
+    assert mod.build.__name__ == "<lambda>" and not hasattr(mod.build, "__wrapped__")
+    run, build, outer, inner = tr.spans
+    assert (run["parent"], build["parent"], outer["parent"]) == (None, 0, 0)
+    assert inner["parent"] == outer["id"] and inner["name"] == "build"
+    # a step stays open after its call returns, until the next step
+    assert after_build == build["id"] and after_outer == outer["id"]
+    assert build["t1"] <= outer["t0"] and outer["t1"] <= run["t1"]
+    assert tr.last["layer.b:outer"] == 4
+    import workloads
+    # the nested step of another layer is counted; a same-layer one is not
+    sums = workloads._span_sums(tr, key="calls")
+    assert sums == {"apps:run": 1, "layer.a:build": 2, "layer.b:outer": 1}
+
+
+def test_end_to_end_metrics_come_from_the_record():
+    rec = {"setup_cpu_s": 50.0, "setup_wall_s": 30.0, "job_s": 8.0, "job_cpu_s": 20.0,
+           "driver_peak_mb": 160.0, "op_p50_s": 1.0}
+    assert set(catalog.end_to_end(rec)) == set(catalog.END_TO_END)
 
 
 def test_self_time_subtracts_child_coverage():

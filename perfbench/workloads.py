@@ -1,15 +1,15 @@
-"""The four benchmark workloads.
+"""The two benchmark workloads.
 
 Each workload generates its inputs from the seed (``prepare``) and
 runs one pass through the package's public entry points
 (``run_pass``), checking the outputs against a computation that does
-not use Spark (``checks.py``). ``replay`` is the traced pass: the same
-work as ``run_pass``, issued step by step as calls into the layers'
-public functions, one span per call.
+not use Spark (``checks.py``). The traced run calls the same
+``run_pass`` under a ``spans.Tracer``: ``trace_targets`` names the
+layer functions the tracer patches so that each call into them is a
+span of the real app run (``spans.py``).
 
 A pass returns its operations as ``(wall_s, cpu_s, errors)``: one per
-app run (hw_points, corpus_prep), micro-batch (stream_items) or query
-(query_mix); a replay returns each operation's errors. ``cpu_s`` reads
+app run (apps) or query (query_mix). ``cpu_s`` reads
 the ``cpu`` clock the runner sets (CPU seconds of the driver, its JVM
 and Python workers). An operation that raised or failed its check
 counts in ``failed``.
@@ -17,31 +17,48 @@ counts in ``failed``.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import random
 import time
+from contextlib import contextmanager
 
 import numpy as np
+import pyarrow.parquet as pq
 
 import checks
 import gen
 from catalog import QUERY_MODULES
 
+PKG = "big_data_hw_23_24_spark"
+
 
 def _layer_of(module: str) -> str:
-    return module.removeprefix("big_data_hw_23_24_spark.")
+    return module.removeprefix(PKG + ".")
+
+
+def _targets(*specs: tuple[str, str, str]) -> list[tuple]:
+    """``(module, function, step name)`` -> tracer targets; the layer
+    is the module's path inside the package."""
+    import importlib
+
+    return [(importlib.import_module(f"{PKG}.{m}"), fn, m, name)
+            for m, fn, name in specs]
 
 
 class Workload:
     name = ""
-    # nominal seconds of one pass on a 4-core box; sets passes per run
+    # nominal wall seconds of one pass on a 4-core box: a run times
+    # round(--seconds / pass_s) passes, at least one
     pass_s = 1.0
 
     def __init__(self, work: str, seed: int):
         self.work, self.seed = work, seed
         self.inputs: dict = {}
         self.cpu = time.process_time
+        self.tracer = None  # set by the traced run
+        self.notes: dict = {}  # figures of the last pass for the run record
 
     def _timed(self, fn, *a, **kw):
         """``(wall_s, cpu_s, fn(*a, **kw))``."""
@@ -49,19 +66,29 @@ class Workload:
         out = fn(*a, **kw)
         return time.perf_counter() - t0, self.cpu() - c0, out
 
+    def _span(self, layer: str, name: str, fn, *a, **kw):
+        """``fn(*a, **kw)``, as one span when tracing."""
+        if self.tracer is None:
+            return fn(*a, **kw)
+        with self.tracer.span(layer, name):
+            return fn(*a, **kw)
+
     def prepare(self) -> dict:
         raise NotImplementedError
-
-    def rows(self) -> int:
-        return int(self.inputs["rows"])
 
     def run_pass(self, spark) -> list[tuple[float, float, list[str]]]:
         raise NotImplementedError
 
-    def replay(self, spark, tracer) -> list[list[str]]:
-        raise NotImplementedError
+    def trace_targets(self) -> list[tuple]:
+        return []
 
-    def layer_metrics(self, tracer, passes: int) -> dict[str, float]:
+    @contextmanager
+    def traced(self, tracer):
+        """Patch the layer functions of ``trace_targets`` for the traced run."""
+        with tracer.wrap(self.trace_targets()):
+            yield
+
+    def layer_metrics(self, tracer) -> dict[str, float]:
         return {}
 
     def oracle_check(self, spark) -> list[str] | None:
@@ -69,96 +96,165 @@ class Workload:
         return None
 
 
-# --- hw_points ------------------------------------------------------------------
+# --- apps -----------------------------------------------------------------------
 
-class HwPoints(Workload):
-    """HW1 (exact + MRApprox at fixed D) then HW2 (MRFFT R1–R3 + MRApprox
-    at the radius) on one planted point set."""
+class Apps(Workload):
+    """The package's programs end to end, one after the other: the
+    paper's three homeworks, ``apps.hw1.run`` (exact + MRApprox at fixed
+    D) and ``apps.hw2.run`` (MRFFT R1-R3 + MRApprox at the radius) on one
+    planted point set, HW3's ``FrequentItemsMonitor`` draining a planted
+    item stream through ``run_frequent_items`` (one parquet file per
+    trigger), then ``apps.corpus_pipeline.run`` (score, filter, MinHash
+    dedup, connected components, chunk, sorted parquet write)."""
 
-    name, pass_s = "hw_points", 8.0
-    N = 200_000
+    name, pass_s = "apps", 45.0
+    N = 50_000
     D, M, K, L = 0.5, 10, 10, 4          # HW1
-    M2, K2 = 3, 120                      # HW2: K2 ≥ 100 outliers + 9 clusters
+    M2, K2 = 3, 120                      # HW2: K2 >= 100 outliers + 9 clusters
+    ITEMS, FILES = 40_000, 8             # HW3
+    PHI, EPS, DELTA = 0.07, 0.03, 0.1
+    DOCS, SIZE, STRIDE = 1000, 64, 48    # corpus pipeline
 
     def prepare(self):
         d = os.path.join(self.work, "points")
         os.makedirs(d, exist_ok=True)
-        self.inputs = gen.points(d, self.seed, self.N)
-        xy = checks.read_points(self.inputs["path"])
+        pts = gen.points(d, self.seed, self.N)
+        xy = checks.read_points(pts["path"])
         self.exact_oracle = checks.exact_outlier_count(xy, self.D, self.M)
+        d = os.path.join(self.work, "items")
+        os.makedirs(d, exist_ok=True)
+        items = gen.stream(d, self.seed, self.ITEMS, self.FILES)
+        self.items = np.load(os.path.join(d, "stream_items.npy")).tolist()
+        self.triggers: list[float] = []  # triggerExecution seconds per micro-batch
+        d = os.path.join(self.work, "corpus")
+        os.makedirs(d, exist_ok=True)
+        corpus = gen.corpus(d, self.seed, self.DOCS)
+        t = pq.read_table(corpus["path"], columns=["doc_id", "text"]).to_pydict()
+        self.doc_ids, self.texts = t["doc_id"], t["text"]
+        with open(os.path.join(d, "corpus_truth.json")) as f:
+            self.clusters = json.load(f)["clusters"]
+        self.out_dir = os.path.join(self.work, "corpus_out")
+        self.inputs = {"points": pts, "items": items, "corpus": corpus}
         return self.inputs
 
     def _hw1(self, spark):
         from big_data_hw_23_24_spark.apps import hw1
-        return hw1.run(spark, self.inputs["path"], self.D, self.M, self.K,
+        return hw1.run(spark, self.inputs["points"]["path"], self.D, self.M, self.K,
                        self.L, exact_gate=self.N)
 
     def _hw2(self, spark):
         from big_data_hw_23_24_spark.apps import hw2
-        return hw2.run(spark, self.inputs["path"], self.M2, self.K2, self.L)
+        return hw2.run(spark, self.inputs["points"]["path"], self.M2, self.K2, self.L)
+
+    def _hw3(self, spark):
+        """Drain the stream; return its errors. HW3's app reads a
+        socket, so the benchmark drives the monitor and
+        ``run_frequent_items`` it calls with a file source instead."""
+        from big_data_hw_23_24_spark.streaming import frequent_stream, health
+
+        tr = self.tracer
+        calls: list[tuple[str, str, float, float]] = []
+
+        class Monitor(frequent_stream.FrequentItemsMonitor):
+            query = None
+
+            def process_batch(self, *a, **kw):
+                if self.query is None:  # run_frequent_items keeps its query
+                    self.query = spark.streams.active[0]
+                if tr is None:
+                    return super().process_batch(*a, **kw)
+                return _recorded(calls, "streaming.frequent_stream", "process_batch",
+                                 super().process_batch, *a, **kw)
+
+        mon = Monitor(n=self.ITEMS, phi=self.PHI, eps=self.EPS, delta=self.DELTA,
+                      seed=self.seed)
+        if tr is not None:  # the samplers run inside process_batch
+            for smp in (mon.reservoir, mon.sticky):
+                smp.add_many = functools.partial(_recorded, calls, "operators.frequent",
+                                                 "add_many", smp.add_many)
+        stream = (spark.readStream.schema("seq bigint, item bigint")
+                  .option("maxFilesPerTrigger", 1)
+                  .parquet(self.inputs["items"]["path"]))
+        frequent_stream.run_frequent_items(spark, stream, mon, timeout_sec=150.0)
+        prog = [p for p in health.query_progress(mon.query)
+                if int(p.get("numInputRows", 0) or 0) > 0]
+        trig = [p["durationMs"]["triggerExecution"] / 1000.0 for p in prog]
+        self.triggers += trig
+        sticky = mon.sticky
+        errs = checks.check_stream(mon.histogram, self.items, self.inputs["items"]["planted"],
+                                   self.PHI, sticky.table, sticky.estimated_frequent(),
+                                   (sticky.phi - sticky.eps) * sticky.n)
+        planted = self.inputs["items"]["planted"]
+        self.notes["sticky_recall"] = len(set(sticky.estimated_frequent()) & set(planted)) \
+            / len(planted)
+        # the query stops inside the last batch's callback, so that
+        # batch's progress event may never be posted
+        if not self.FILES - 1 <= len(trig) <= self.FILES:
+            errs.append(f"stream: {len(trig)} non-empty triggers, {self.FILES} files")
+        if tr is not None:  # callbacks ran on the stream's thread
+            _add_callback_spans(tr, calls)
+        return errs
+
+    def _corpus(self, spark):
+        from big_data_hw_23_24_spark.apps import corpus_pipeline
+
+        corpus_pipeline.run(spark, self.inputs["corpus"]["path"], self.out_dir,
+                            chunk_size=self.SIZE, stride=self.STRIDE)
+        return pq.read_table(self.out_dir, columns=["doc_id"]).column("doc_id").to_pylist()
 
     def run_pass(self, spark):
-        t1, c1, lines1 = self._timed(self._hw1, spark)
-        t2, c2, lines2 = self._timed(self._hw2, spark)
-        return [(t1, c1, checks.check_hw1(lines1, self.N, self.exact_oracle)),
-                (t2, c2, checks.check_hw2(lines2, self.N, self.inputs["planted_outliers"]))]
+        n = self.N
+        t1, c1, lines1 = self._timed(self._span, "apps", "hw1", self._hw1, spark)
+        t2, c2, lines2 = self._timed(self._span, "apps", "hw2", self._hw2, spark)
+        t3, c3, errs3 = self._timed(self._span, "apps", "hw3", self._hw3, spark)
+        t4, c4, out = self._timed(self._span, "apps", "corpus_pipeline", self._corpus, spark)
+        self.survivors = set(out)
+        return [(t1, c1, checks.check_hw1(lines1, n, self.exact_oracle)),
+                (t2, c2, checks.check_hw2(lines2, n, self.inputs["points"]["planted_outliers"])),
+                (t3, c3, errs3),
+                (t4, c4, checks.check_corpus(out, self.doc_ids, self.texts, self.clusters,
+                                             self.SIZE, self.STRIDE))]
 
-    def replay(self, spark, tr):
-        from pyspark.sql import functions as F
+    def trace_targets(self):
+        return _targets(
+            ("sources.tables", "read_points_csv", "read_points_csv"),
+            ("operators.outliers", "exact_outliers", "exact_outliers"),
+            ("operators.outliers", "cell_grid_stats", "cell_grid_stats"),
+            ("operators.outliers", "mr_approx_outliers", "mr_approx_outliers"),
+            ("operators.clustering", "_partition_fft", "coreset"),
+            ("operators.clustering", "sequential_fft", "sequential_fft"),
+            ("operators.clustering", "_partition_max_min_dist", "radius"),
+            ("streaming.frequent_stream", "run_frequent_items", "run_frequent_items"),
+            ("operators.textstats", "quality_scores", "quality_scores"),
+            ("operators.dedup", "minhash_near_duplicates", "minhash_near_duplicates"),
+            ("operators.components", "connected_components", "connected_components"),
+            ("operators.textstats", "token_chunks", "token_chunks"),
+            ("sources.sinks", "write_sorted_parquet", "write_sorted_parquet"))
 
-        from big_data_hw_23_24_spark.operators import clustering, outliers
-        from big_data_hw_23_24_spark.sources import tables
+    def _quality(self, tr) -> dict[str, float]:
+        """Dedup and sink figures of the last traced pass, computed
+        after it (outside every span)."""
+        pairs = tr.last.get("operators.dedup:minhash_near_duplicates")
+        rows = pairs.select("id_a", "id_b").collect() if pairs is not None else []
+        member = {i: k for k, c in enumerate(self.clusters) for i in c}
+        planted = sum(1 for a, b in rows if a in member and member.get(a) == member.get(b))
+        n_dups = sum(len(c) - 1 for c in self.clusters)
+        survivors = getattr(self, "survivors", set(member))  # unset if the run raised
+        removed = sum(1 for i in member if i not in survivors)
+        written = os.listdir(self.out_dir) if os.path.isdir(self.out_dir) else []
+        return {
+            "operators.dedup.candidate_pairs": len(rows),
+            "operators.dedup.pair_precision": planted / len(rows) if rows else 0.0,
+            "operators.dedup.dup_recall": removed / n_dups if n_dups else 0.0,
+            "sources.sinks.bytes_written": sum(
+                os.path.getsize(os.path.join(self.out_dir, f))
+                for f in written if f.endswith(".parquet")),
+        }
 
-        path, L = self.inputs["path"], self.L
-        with tr.span("sources.tables", "read_points_csv"):
-            pts = tables.read_points_csv(spark, path, float32_parity=True) \
-                .withColumn("pid", F.monotonically_increasing_id())
-            pts = pts.repartition(L).cache()
-            n = pts.count()
-        with tr.span("operators.outliers", "exact_outliers"):
-            out = outliers.exact_outliers(pts, self.D, self.M)
-            out.orderBy("n_neighbors", "pid").limit(self.K).collect()
-            n_exact = out.count()
-        with tr.span("operators.outliers", "cell_grid_stats"):
-            stats = outliers.cell_grid_stats(pts, self.D).cache()
-            sure, unc = stats.agg(
-                F.coalesce(F.sum(F.when(F.col("n7") <= self.M, F.col("size"))), F.lit(0)),
-                F.coalesce(F.sum(F.when((F.col("n3") <= self.M) & (F.col("n7") > self.M),
-                                        F.col("size"))), F.lit(0)),
-            ).collect()[0]
-            stats.orderBy("size", "ci", "cj").limit(self.K).collect()
-        stats.unpersist()
-        pts.unpersist()
-        lines1 = [f"Number of points: {n}", f"Number of Outliers = {n_exact}",
-                  f"Number of sure outliers = {sure}",
-                  f"Number of uncertain points = {unc}"]
-        with tr.span("sources.tables", "read_points_csv"):
-            pts = tables.read_points_csv(spark, path, float32_parity=True) \
-                .repartition(L).cache()
-            n = pts.count()
-        df = pts.select("x", "y")
-        with tr.span("operators.clustering", "coreset"):
-            rows = df.mapInPandas(clustering._partition_fft(self.K2),
-                                  "x double, y double").collect()
-            coreset = np.array([[r.x, r.y] for r in rows], dtype=np.float64).reshape(-1, 2)
-        with tr.span("operators.clustering", "sequential_fft"):
-            centers = clustering.sequential_fft(coreset, self.K2)
-        with tr.span("operators.clustering", "radius"):
-            row = df.mapInPandas(clustering._partition_max_min_dist(centers),
-                                 "partial_max double").agg(F.max("partial_max")).collect()[0]
-            radius = float(np.float32(row[0] ** 0.5))
-        with tr.span("operators.outliers", "mr_approx_outliers"):
-            srow = outliers.mr_approx_outliers(pts.withColumn("pid", F.lit(0)),
-                                               radius, self.M2).collect()[0]
-        pts.unpersist()
-        lines2 = [f"Number of points: {n}",
-                  f"Number of sure outliers = {srow['sure_outliers']}",
-                  f"Number of uncertain points = {srow['uncertain_points']}"]
-        return [checks.check_hw1(lines1, self.N, self.exact_oracle),
-                checks.check_hw2(lines2, self.N, self.inputs["planted_outliers"])]
-
-    def layer_metrics(self, tr, passes):
-        by = _span_sums(tr, passes)
+    def layer_metrics(self, tr):
+        by = _span_sums(tr)
+        jobs = _span_sums(tr, key="jobs")
+        busy = by.get("streaming.frequent_stream:process_batch", 0.0)
         return {
             "sources.tables.read_points_csv_s": by.get("sources.tables:read_points_csv", 0.0),
             "operators.outliers.exact_s": by.get("operators.outliers:exact_outliers", 0.0),
@@ -167,205 +263,39 @@ class HwPoints(Workload):
             "operators.clustering.coreset_s": by.get("operators.clustering:coreset", 0.0),
             "operators.clustering.fft_s": by.get("operators.clustering:sequential_fft", 0.0),
             "operators.clustering.radius_s": by.get("operators.clustering:radius", 0.0),
-        }
-
-
-# --- corpus_prep ----------------------------------------------------------------
-
-class CorpusPrep(Workload):
-    """``apps.corpus_pipeline.run`` end to end: score, filter, MinHash
-    dedup, connected components, chunk, sorted parquet write."""
-
-    name, pass_s = "corpus_prep", 8.0
-    N = 3000
-    SIZE, STRIDE = 64, 48
-
-    def prepare(self):
-        import pyarrow.parquet as pq
-
-        d = os.path.join(self.work, "corpus")
-        os.makedirs(d, exist_ok=True)
-        self.inputs = gen.corpus(d, self.seed, self.N)
-        t = pq.read_table(self.inputs["path"], columns=["doc_id", "text"]).to_pydict()
-        self.doc_ids, self.texts = t["doc_id"], t["text"]
-        with open(os.path.join(d, "corpus_truth.json")) as f:
-            self.clusters = json.load(f)["clusters"]
-        self.out_dir = os.path.join(self.work, "corpus_out")
-        return self.inputs
-
-    def _check_output(self) -> list[str]:
-        import pyarrow.parquet as pq
-
-        out = pq.read_table(self.out_dir, columns=["doc_id"]).column("doc_id").to_pylist()
-        return checks.check_corpus(out, self.doc_ids, self.texts, self.clusters,
-                                   self.SIZE, self.STRIDE)
-
-    def run_pass(self, spark):
-        from big_data_hw_23_24_spark.apps import corpus_pipeline
-
-        t, c, _ = self._timed(corpus_pipeline.run, spark, self.inputs["path"],
-                              self.out_dir, chunk_size=self.SIZE, stride=self.STRIDE)
-        return [(t, c, self._check_output())]
-
-    def replay(self, spark, tr):
-        from pyspark.sql import functions as F
-
-        from big_data_hw_23_24_spark.operators import components, dedup, textstats
-        from big_data_hw_23_24_spark.sources import sinks
-
-        with tr.span("apps.corpus_pipeline", "read"):
-            docs = spark.read.parquet(self.inputs["path"]) \
-                .select("doc_id", "text", "source", "lang").cache()
-            docs.count()
-        with tr.span("operators.textstats", "quality_scores"):
-            q = textstats.quality_scores(docs).select("doc_id", "quality_score")
-            kept = docs.join(q.where(F.col("quality_score") >= 0.5), "doc_id") \
-                .select("doc_id", "text", "source", "lang").cache()
-            kept.count()
-        with tr.span("operators.dedup", "minhash_near_duplicates"):
-            pairs = dedup.minhash_near_duplicates(kept, threshold=0.7)
-            pair_rows = pairs.select("id_a", "id_b").collect()
-        with tr.span("operators.components", "connected_components"):
-            comp = components.connected_components(pairs)
-            losers = comp.where(F.col("doc_id") != F.col("component")).select("doc_id")
-        with tr.span("apps.corpus_pipeline", "drop_duplicates"):
-            deduped = kept.join(losers, "doc_id", "left_anti").cache()
-            deduped.count()
-            loser_ids = {r.doc_id for r in losers.collect()}
-        with tr.span("operators.textstats", "token_chunks"):
-            chunks = textstats.token_chunks(deduped, size=self.SIZE,
-                                            stride=self.STRIDE).cache()
-            chunks.count()
-        with tr.span("sources.sinks", "write_sorted_parquet"):
-            sinks.write_sorted_parquet(chunks, self.out_dir, ["doc_id", "chunk_id"])
-        with tr.span("apps.corpus_pipeline", "count_output"):
-            spark.read.parquet(self.out_dir).count()
-        for df in (chunks, deduped, kept, docs):
-            df.unpersist()
-        member = {i: k for k, c in enumerate(self.clusters) for i in c}
-        planted = sum(1 for a, b in pair_rows
-                      if a in member and member.get(a) == member.get(b))
-        n_dups = sum(len(c) - 1 for c in self.clusters)
-        removed = sum(1 for i in loser_ids if i in member)
-        self._quality = {
-            "operators.dedup.candidate_pairs": len(pair_rows),
-            "operators.dedup.pair_precision": planted / len(pair_rows) if pair_rows else 0.0,
-            "operators.dedup.dup_recall": removed / n_dups if n_dups else 0.0,
-            "sources.sinks.bytes_written": sum(
-                os.path.getsize(os.path.join(self.out_dir, f))
-                for f in os.listdir(self.out_dir) if f.endswith(".parquet")),
-        }
-        return [self._check_output()]
-
-    def layer_metrics(self, tr, passes):
-        by = _span_sums(tr, passes)
-        jobs = _span_sums(tr, passes, key="jobs")
-        return {
+            "streaming.frequent_stream.process_batch_s": busy,
+            "streaming.frequent_stream.engine_s": sum(self.triggers) - busy,
+            "streaming.frequent_stream.batches": len(self.triggers),
+            "operators.frequent.sampler_s": by.get("operators.frequent:add_many", 0.0),
+            "operators.frequent.sticky_recall": self.notes.get("sticky_recall", 0.0),
             "operators.textstats.quality_s": by.get("operators.textstats:quality_scores", 0.0),
             "operators.textstats.chunk_s": by.get("operators.textstats:token_chunks", 0.0),
             "operators.dedup.minhash_s": by.get("operators.dedup:minhash_near_duplicates", 0.0),
             "operators.components.cc_s": by.get("operators.components:connected_components", 0.0),
             "operators.components.jobs": jobs.get("operators.components:connected_components", 0.0),
             "sources.sinks.write_s": by.get("sources.sinks:write_sorted_parquet", 0.0),
-            **self._quality,
+            **self._quality(tr),
         }
 
 
-# --- stream_items ---------------------------------------------------------------
-
-class StreamItems(Workload):
-    """Drain a backlog of parquet files through
-    ``run_frequent_items`` with ``FrequentItemsMonitor``, one file per
-    trigger."""
-
-    name, pass_s = "stream_items", 12.0
-    N, FILES = 200_000, 20
-    PHI, EPS, DELTA = 0.07, 0.03, 0.1
-
-    def prepare(self):
-        d = os.path.join(self.work, "items")
-        os.makedirs(d, exist_ok=True)
-        self.inputs = gen.stream(d, self.seed, self.N, self.FILES)
-        self.items = np.load(os.path.join(d, "stream_items.npy")).tolist()
-        self._trig_total, self._batches = 0.0, 0
-        return self.inputs
-
-    def _drain(self, spark, wrap=None):
-        from big_data_hw_23_24_spark.streaming import frequent_stream, health
-
-        class Monitor(frequent_stream.FrequentItemsMonitor):
-            query = None
-
-            def process_batch(self, *a, **kw):
-                if self.query is None:  # run_frequent_items keeps its query
-                    self.query = spark.streams.active[0]
-                return super().process_batch(*a, **kw)
-
-        mon = Monitor(n=self.N, phi=self.PHI, eps=self.EPS, delta=self.DELTA,
-                      seed=self.seed)
-        if wrap is not None:
-            wrap(mon)
-        stream = (spark.readStream.schema("seq bigint, item bigint")
-                  .option("maxFilesPerTrigger", 1).parquet(self.inputs["path"]))
-        frequent_stream.run_frequent_items(spark, stream, mon, timeout_sec=150.0)
-        prog = [p for p in health.query_progress(mon.query)
-                if int(p.get("numInputRows", 0) or 0) > 0]
-        trig = [p["durationMs"]["triggerExecution"] / 1000.0 for p in prog]
-        errs = checks.check_stream(mon.histogram, self.items, self.inputs["planted"],
-                                   self.PHI, mon.sticky.estimated_frequent())
-        # the query stops inside the last batch's callback, so that
-        # batch's progress event may never be posted
-        if not self.FILES - 1 <= len(trig) <= self.FILES:
-            errs.append(f"stream: {len(trig)} non-empty triggers, {self.FILES} files")
-        return trig, errs
-
-    def run_pass(self, spark):
-        _, cpu, (trig, errs) = self._timed(self._drain, spark)
-        # CPU is read per drain; each trigger gets an equal share
-        return [(t, cpu / max(len(trig), 1), errs) for t in trig]
-
-    def replay(self, spark, tr):
-        batches: list[tuple[float, float]] = []
-        samples: list[tuple[float, float]] = []
-
-        def wrap(mon):
-            mon.process_batch = _recording(mon.process_batch, batches)
-            mon.reservoir.add_many = _recording(mon.reservoir.add_many, samples)
-            mon.sticky.add_many = _recording(mon.sticky.add_many, samples)
-
-        with tr.span("streaming.frequent_stream", "run_frequent_items") as drain:
-            trig, errs = self._drain(spark, wrap)
-        # callbacks ran on the stream's thread: add their spans afterwards
-        ids = [(t0, t1, tr.add("streaming.frequent_stream", "process_batch",
-                               t0, t1, drain["id"])["id"]) for t0, t1 in batches]
-        for t0, t1 in samples:
-            parent = next((i for a, b, i in ids if a <= t0 and t1 <= b), drain["id"])
-            tr.add("operators.frequent", "add_many", t0, t1, parent)
-        self._trig_total += sum(trig)
-        self._batches += len(trig)
-        return [errs for _ in trig]
-
-    def layer_metrics(self, tr, passes):
-        by = _span_sums(tr, passes)
-        busy = by.get("streaming.frequent_stream:process_batch", 0.0)
-        return {
-            "streaming.frequent_stream.process_batch_s": busy,
-            "streaming.frequent_stream.engine_s": self._trig_total / passes - busy,
-            "streaming.frequent_stream.batches": self._batches / passes,
-            "operators.frequent.sampler_s": by.get("operators.frequent:add_many", 0.0),
-        }
+def _recorded(into: list, layer: str, name: str, fn, *a, **kw):
+    """``fn(*a, **kw)``, appending ``(layer, name, start, end)``
+    perf_counter times to ``into`` (list.append is thread-safe)."""
+    t0 = time.perf_counter()
+    try:
+        return fn(*a, **kw)
+    finally:
+        into.append((layer, name, t0, time.perf_counter()))
 
 
-def _recording(fn, into: list):
-    """``fn`` that appends its ``(start, end)`` perf_counter times to
-    ``into``; safe to call from a callback thread (list.append)."""
-    def call(*a, **kw):
-        t0 = time.perf_counter()
-        try:
-            return fn(*a, **kw)
-        finally:
-            into.append((t0, time.perf_counter()))
-    return call
+def _add_callback_spans(tr, calls) -> None:
+    """Add spans timed on a callback thread under the innermost span
+    open on the tracing thread that contains them."""
+    outer = tr.current()
+    ids: list[tuple[float, float, int]] = []
+    for layer, name, t0, t1 in sorted(calls, key=lambda c: (c[2], -c[3])):
+        parent = next((i for a, b, i in reversed(ids) if a <= t0 and t1 <= b), outer)
+        ids.append((t0, t1, tr.add(layer, name, t0, t1, parent)["id"]))
 
 
 # --- query_mix ------------------------------------------------------------------
@@ -383,7 +313,7 @@ class QueryMix(Workload):
     """One client in a closed loop over registry queries, each
     ``fn(spark, sf_dir)`` then ``.count()``, in a seed-shuffled order."""
 
-    name, pass_s = "query_mix", 8.0
+    name, pass_s = "query_mix", 25.0
 
     def prepare(self):
         d = os.path.join(self.work, "tables")
@@ -394,9 +324,6 @@ class QueryMix(Workload):
         self.expected: dict[str, int] = {}
         return self.inputs
 
-    def rows(self):
-        return sum(self.inputs["rows"].values())
-
     def _fns(self):
         from big_data_hw_23_24_spark.queries import queries
         reg = queries()
@@ -406,11 +333,21 @@ class QueryMix(Workload):
         want = self.expected.setdefault(name, count)
         return [] if count == want else [f"{name}: {count} rows, first pass had {want}"]
 
+    def _query(self, spark, name, fn) -> int:
+        sf, tr = self.inputs["path"], self.tracer
+        if tr is None:
+            return fn(spark, sf).count()
+        layer = _layer_of(fn.__module__)
+        with tr.span(layer, name):
+            with tr.span(layer, "build"):
+                df = fn(spark, sf)
+            with tr.span(layer, "action"):
+                return df.count()
+
     def run_pass(self, spark):
-        sf = self.inputs["path"]
         ops = []
         for name, fn in self._fns().items():
-            t, c, count = self._timed(lambda: fn(spark, sf).count())
+            t, c, count = self._timed(self._query, spark, name, fn)
             ops.append((t, c, self._count_check(name, count)))
         return ops
 
@@ -432,41 +369,33 @@ class QueryMix(Workload):
             con.close()
         return checks.check_query(name, got, want)
 
-    def replay(self, spark, tr):
+    @contextmanager
+    def traced(self, tracer):
+        """Time ``load_table`` as a span wherever a query module calls it."""
         import importlib
 
         from big_data_hw_23_24_spark.sources import tables
 
         orig = tables.load_table
-        mods = [importlib.import_module(f"big_data_hw_23_24_spark.{m}") for m in QUERY_MODULES]
+        mods = [importlib.import_module(f"{PKG}.{m}") for m in QUERY_MODULES] + [tables]
 
         def load_table(*a, **kw):
-            with tr.span("sources.tables", "load_table"):
+            with tracer.span("sources.tables", "load_table"):
                 return orig(*a, **kw)
 
-        patched = [m for m in mods + [tables] if getattr(m, "load_table", None) is orig]
+        patched = [m for m in mods if getattr(m, "load_table", None) is orig]
         for m in patched:
             m.load_table = load_table
-        sf = self.inputs["path"]
-        ops = []
         try:
-            for name, fn in self._fns().items():
-                layer = _layer_of(fn.__module__)
-                with tr.span(layer, name):
-                    with tr.span(layer, "build"):
-                        df = fn(spark, sf)
-                    with tr.span(layer, "action"):
-                        count = df.count()
-                ops.append(self._count_check(name, count))
+            yield
         finally:
             for m in patched:
                 m.load_table = orig
-        return ops
 
-    def layer_metrics(self, tr, passes):
+    def layer_metrics(self, tr):
         out: dict[str, float] = {}
-        by = _span_sums(tr, passes)
-        calls = _span_sums(tr, passes, key="calls")
+        by = _span_sums(tr)
+        calls = _span_sums(tr, key="calls")
         out["sources.tables.load_table_calls"] = calls.get("sources.tables:load_table", 0.0)
         out["sources.tables.load_table_s"] = by.get("sources.tables:load_table", 0.0)
         per_mod = {m: sum(1 for n, fn in self._fns().items()
@@ -474,7 +403,7 @@ class QueryMix(Workload):
         jobs: dict[str, float] = {}
         for s in tr.spans:
             if s["name"] in QUERIES:
-                jobs[s["layer"]] = jobs.get(s["layer"], 0.0) + _subtree_jobs(tr.spans, s) / passes
+                jobs[s["layer"]] = jobs.get(s["layer"], 0.0) + _subtree_jobs(tr.spans, s)
         for m in QUERY_MODULES:
             k = max(per_mod[m], 1)
             out[f"{m}.build_s"] = by.get(f"{m}:build", 0.0) / k
@@ -483,15 +412,29 @@ class QueryMix(Workload):
         return out
 
 
-def _span_sums(tr, passes: int, key: str = "time") -> dict[str, float]:
-    """Per ``layer:name`` totals over all spans, divided by passes.
-    ``key``: ``time`` (seconds), ``jobs`` (Spark jobs) or ``calls``."""
+def _span_sums(tr, key: str = "time") -> dict[str, float]:
+    """Per ``layer:name`` totals over the spans not nested in a step of
+    the same layer. ``key``: ``time`` (seconds), ``jobs`` (Spark jobs)
+    or ``calls``."""
     out: dict[str, float] = {}
     for s in tr.spans:
+        if _nested_in_layer(tr.spans, s):
+            continue
         k = f"{s['layer']}:{s['name']}"
         v = {"time": s["t1"] - s["t0"], "jobs": s["jobs"], "calls": 1}[key]
-        out[k] = out.get(k, 0.0) + v / passes
+        out[k] = out.get(k, 0.0) + v
     return out
+
+
+def _nested_in_layer(spans: list[dict], s: dict) -> bool:
+    """A step called from inside a step of its own layer (e.g.
+    ``cell_grid_stats`` from ``mr_approx_outliers``)."""
+    p = s["parent"] if s.get("step") else None
+    while p is not None:
+        if spans[p].get("step") and spans[p]["layer"] == s["layer"]:
+            return True
+        p = spans[p]["parent"]
+    return False
 
 
 def _subtree_jobs(spans: list[dict], root: dict) -> int:
@@ -505,4 +448,4 @@ def _subtree_jobs(spans: list[dict], root: dict) -> int:
     return total
 
 
-WORKLOADS = {w.name: w for w in (HwPoints, CorpusPrep, StreamItems, QueryMix)}
+WORKLOADS = {w.name: w for w in (Apps, QueryMix)}
