@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract for the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A caller brings its own plain SparkSession, runs ``entry(spark)`` as a
+smoke check, then runs each ``queries()[name]`` and compares it against
+the matching ``oracle_sql()[name]`` via DuckDB (row count, schema and
+order-insensitive values; ``tests/test_oracle_parity.py`` does the same
+for every registered query).
 
 The real registry lives in ``big_data_hw_23_24_spark.queries``; this
 module just re-exports it and provides the flagship entry.

@@ -976,8 +976,8 @@ def streaming_ingest_health(spark, sf_dir):
 # re-read ONLY the lagged bucket range (range bound in the source glob
 # — partitions outside the lag window are never listed), land via
 # dynamic partition overwrite. The query runs the catch-up TWICE with
-# fresh checkpoints — the driver's value compare against the source-
-# side oracle IS the no-duplicate-landing proof (a second append would
+# fresh checkpoints — the value compare against the source-side
+# oracle IS the no-duplicate-landing proof (a second append would
 # double every count and checksum).
 @register(
     "streaming_backfill_catchup",

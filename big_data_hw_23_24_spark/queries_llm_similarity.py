@@ -756,8 +756,8 @@ def knn_ivf_pinned(spark, sf_dir):
 # corpus. Both sides are already value-checked faces, so the oracle is
 # their CTE composition and every miss in the report is the REAL
 # recall cost of probing nprobe=4 of 16 lists — not engine noise.
-# Deliberately NOT in the bench HEADLINE: the exact side is the
-# brute-force form, run once per rollout as a gate (the E140 rule).
+# The exact side is the brute-force form, meant to run once per
+# rollout as a gate (the E140 rule), not on every query pass.
 def _knn_eval_sql() -> str:
     return f"""
     WITH ex AS ({_R["knn_cosine_bruteforce"].oracle}),

@@ -174,8 +174,8 @@ def top_customers_per_nation(spark, sf_dir):
     """,
     doc="cumulative window aggregate (new surface; reference has none). "
         "Redundant face: customer_rolling_30d carries the same "
-        "ROWS-frame running total inside the driver's checked window; "
-        "this standalone form stays pytest-oracle-checked",
+        "ROWS-frame running total; this standalone form stays "
+        "oracle-checked",
 )
 def running_order_total(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")

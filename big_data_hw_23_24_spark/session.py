@@ -15,16 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 # Local test profile. local[N] = one JVM; shuffle partitions sized to
-# cores, not the 200 default. On a real cluster these confs are
-# supplied by spark-submit; only the AQE/timezone lines matter there.
+# cores, not the 200 default (both set in get_session). On a real
+# cluster these confs are supplied by spark-submit; only the
+# AQE/timezone lines matter there.
 _LOCAL_CONFS = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
     # mirrors the reference cluster profile (G016HW2.java:58)
     "spark.locality.wait": "0s",
@@ -41,14 +40,20 @@ def get_session(app_name: str = "big_data_hw_23_24_spark",
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; pass
     ``None`` under spark-submit on a cluster and the submitted master
-    wins (getOrCreate reuses the active session).
+    wins (getOrCreate reuses the active session). ``SPARK_GRAFT_CPUS``
+    defaults to the cores this process may run on and also sizes the
+    shuffle partitions; ``SPARK_GRAFT_DRIVER_MEM`` defaults to 24g.
     """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = builder.master(master)
-    confs = dict(_LOCAL_CONFS)
+    confs = {
+        **_LOCAL_CONFS,
+        "spark.sql.shuffle.partitions": cpus,
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    }
     if extra_confs:
         confs.update(extra_confs)
     for k, v in confs.items():
